@@ -26,29 +26,20 @@ from pyspark.sql import functions as F
 from ..operators.asof import latest_per_key
 from ..schemas import RAW_SCHEMA
 from ..session import configure_runtime
-from ..sources.config import DbConfig
 from ..transform import clean_state_vectors
 from .control import FileLog
-from .export import export_clean_csv, write_staging_jdbc
+from .export import export_clean_csv
 
 
 def discover_new_files(spark: SparkSession, landing_dir: str, file_log: FileLog) -> list[str]:
-    """T1.4 + T1.5: glob the landing zone, anti-join the ledger,
-    register survivors as NEW, return their paths."""
+    """T1.4 + T1.5: list the landing zone, register unseen crawls as
+    NEW, return the paths of every crawl still NEW."""
     names = [
         f
         for f in sorted(os.listdir(landing_dir))
         if f.startswith("states_") and f.endswith(".csv")
     ]
-    if not names:
-        return []
-    names_df = spark.createDataFrame([(n,) for n in names], ["file_name"])
-    file_log.register_new(names_df)
-    new = {
-        r.file_name
-        for r in file_log.current().filter(F.col("status") == "NEW").collect()
-    }
-    return [f"{landing_dir}/{n}" for n in names if n in new]
+    return [f"{landing_dir}/{n}" for n in file_log.register_new(names)]
 
 
 def stage_files(
@@ -58,16 +49,14 @@ def stage_files(
     silver_dir: str,
     file_log: FileLog,
     clean_csv_dir: str | None = None,
-    jdbc: "DbConfig | None" = None,
 ) -> dict[str, str]:
     """EP2 core loop with per-file fault isolation (T1.22).
 
     Returns {file_name: final_status}. Each file: raw read (explicit
     schema, no inference) → bronze append → §1.3 clean transform →
     silver append partitioned by event date. Optional reference-
-    contract sinks: `clean_csv_dir` emits DataStaging-style
-    clean_<name>.csv per file (T1.18), `jdbc` appends the raw frame to
-    a relational staging table (T1.17) — see warehouse/export.py."""
+    contract sink: `clean_csv_dir` emits DataStaging-style
+    clean_<name>.csv per file (T1.18) — see warehouse/export.py."""
     configure_runtime(spark)
     results: dict[str, str] = {}
     for path in paths:
@@ -81,8 +70,6 @@ def stage_files(
             bronze.withColumn(
                 "ingest_date", F.to_date("load_timestamp")
             ).write.mode("append").partitionBy("ingest_date").parquet(bronze_dir)
-            if jdbc is not None:
-                write_staging_jdbc(bronze, jdbc)
 
             clean = clean_state_vectors(raw, file_source=F.lit(name))
             if clean_csv_dir is not None:

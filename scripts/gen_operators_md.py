@@ -29,11 +29,14 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
     ("T1.4", "Directory scan + glob filter",
      "`warehouse/etl.py::discover_new_files`; streaming twin `streaming/ingest.py::stream_landing_source`"),
     ("T1.5", "Incremental-set anti-join",
-     "`warehouse/etl.py::discover_new_files` (left-anti on FileLog); subsumed by stream checkpoint"),
+     "`warehouse/etl.py::discover_new_files` (landing listing minus the FileLog keys, on the driver); "
+     "subsumed by stream checkpoint"),
     ("T1.6", "Idempotent keyed insert",
-     "`warehouse/control.py::FileLog.register_new` (dropDuplicates + left-anti); test_ingest idempotency"),
+     "`warehouse/control.py::FileLog.register_new` (unknown names appended NEW in one pyarrow event file); "
+     "test_ingest idempotency"),
     ("T1.7", "Keyed UPDATE",
-     "`warehouse/control.py::FileLog.record` / `JobLog.end` (event-log + latest-wins + `compact()`); data-plane MERGE INTO: "
+     "`warehouse/control.py::FileLog.record` / `JobLog.end` (driver-side pyarrow event log + latest-wins fold + "
+     "`compact()`); data-plane MERGE INTO: "
      "`warehouse/versioned.py::VersionedParquetTable.merge_into` / `overwrite_partitions` (copy-on-write versions, atomic pointer flip, "
      "hard-linked untouched partitions) — tests/test_versioned.py"),
     ("T1.8", "Point-lookup scan", "query `point_lookup`"),

@@ -152,7 +152,17 @@ def test_stage_files_emits_clean_csv(spark, tmp_path):
     from data_warehouse_opensky_spark.warehouse.control import FileLog
     from data_warehouse_opensky_spark.warehouse.etl import stage_files
 
-    src = sorted(glob.glob(f"{REF_DATA}/states_*.csv"))[:2]
+    header = ",".join(RAW_SCHEMA.fieldNames())
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    src = []
+    for i, icao in enumerate(("abc123", "def456")):
+        p = landing / f"states_job_20251113_09{i}000.csv"
+        p.write_text(
+            f"{header}\n{icao},CALL{i}   ,Nowhere,1700000000,1700000010,1.0,2.0,"
+            "3.0,false,4.0,5.0,6.0,,7.0,1000,false,0\n"
+        )
+        src.append(str(p))
     log = FileLog(spark, str(tmp_path / "control"))
     csv_dir = str(tmp_path / "DataStaging")
     res = stage_files(
@@ -163,7 +173,7 @@ def test_stage_files_emits_clean_csv(spark, tmp_path):
         log,
         clean_csv_dir=csv_dir,
     )
-    assert all(v == "CLEAN_EXPORTED" for v in res.values())
+    assert res == {os.path.basename(p): "CLEAN_EXPORTED" for p in src}
     for p in src:
         assert os.path.exists(f"{csv_dir}/clean_{os.path.basename(p)}")
 

@@ -35,6 +35,13 @@ PAYLOAD_2 = {
     ],
 }
 PAYLOAD_EMPTY = {"time": 1700001200, "states": None}
+CRAWL_CSV = (
+    "icao24,callsign,origin_country,time_position,last_contact,longitude,"
+    "latitude,baro_altitude,on_ground,velocity,true_track,vertical_rate,"
+    "sensors,geo_altitude,squawk,spi,position_source\n"
+    "abc123,CALL123 ,Nowhere,1700000000,1700000010,1.0,2.0,3.0,false,"
+    "4.0,5.0,6.0,,7.0,1000,false,0\n"
+)
 
 
 def fake_fetcher_for(payload):
@@ -100,13 +107,7 @@ def test_per_file_fault_isolation(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
     good = landing / "states_job_20251113_090000.csv"
-    good.write_text(
-        "icao24,callsign,origin_country,time_position,last_contact,longitude,"
-        "latitude,baro_altitude,on_ground,velocity,true_track,vertical_rate,"
-        "sensors,geo_altitude,squawk,spi,position_source\n"
-        "abc123,CALL123 ,Nowhere,1700000000,1700000010,1.0,2.0,3.0,false,"
-        "4.0,5.0,6.0,,7.0,1000,false,0\n"
-    )
+    good.write_text(CRAWL_CSV)
     poison = landing / "states_job_20251113_091000.csv"
     poison.write_bytes(b"\x00\x01\x02 not a csv at all")
 
@@ -117,6 +118,26 @@ def test_per_file_fault_isolation(spark, tmp_path):
     # statuses were recorded for both.
     assert res[good.name] == "CLEAN_EXPORTED"
     assert set(res) == {good.name, poison.name}
+
+
+def test_file_left_new_by_interrupted_run_is_staged(spark, tmp_path):
+    """A crawl registered NEW by a run that died before staging it is
+    staged by the next load, exactly once, without a second NEW event."""
+    from data_warehouse_opensky_spark.warehouse.control import FileLog
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    crawl = landing / "states_job_20251113_090000.csv"
+    crawl.write_text(CRAWL_CSV)
+    wh = str(tmp_path / "warehouse")
+    ledger = f"{wh}/control/file_log"
+    FileLog(spark, ledger).record(crawl.name, "NEW")
+
+    assert run_incremental_load(spark, str(landing), wh) == {crawl.name: "CLEAN_EXPORTED"}
+    assert spark.read.parquet(f"{wh}/silver/state_vectors").count() == 1
+    statuses = [r.status for r in spark.read.parquet(ledger).orderBy("seq").collect()]
+    assert statuses == ["NEW", "PROCESSING", "CLEAN_EXPORTED"]
+    assert run_incremental_load(spark, str(landing), wh) == {}
 
 
 def test_row_level_quarantine_split(spark):

@@ -309,6 +309,96 @@ def test_file_log_compact_mid_state_is_reader_atomic(spark, tmp_path):
     assert _current_rows(log) == before
 
 
+def test_file_log_ignores_dot_prefixed_partial_file(spark, tmp_path):
+    """An append interrupted mid-write leaves its `.`-prefixed temp file
+    behind: current() skips it and the next compact removes it."""
+    from data_warehouse_opensky_spark.warehouse.control import FileLog
+
+    log = FileLog(spark, str(tmp_path / "file_log"))
+    log.record("a.csv", "NEW")
+    log.record("a.csv", "CLEAN_EXPORTED", row_count=5)
+    before = _current_rows(log)
+    partial = os.path.join(log.path, ".part-interrupted.parquet")
+    with open(partial, "wb") as fh:
+        fh.write(b"PAR1 truncated")
+    assert _current_rows(log) == before
+    assert log.compact() == 1
+    assert not os.path.exists(partial)
+    assert _current_rows(log) == before
+
+
+def test_file_log_reads_and_compacts_spark_written_ledger(spark, tmp_path):
+    """Upgrade path: a ledger whose older events were appended by Spark's
+    parquet writer (INT96 timestamps, `_SUCCESS`, `.crc` files) reads back
+    with the same current() as Spark's latest-wins over the directory,
+    takes new events, and compacts to a single file."""
+    from datetime import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_opensky_spark.operators.asof import latest_per_key
+    from data_warehouse_opensky_spark.warehouse.control import (
+        FILE_LOG_SCHEMA,
+        FileLog,
+    )
+
+    path = str(tmp_path / "file_log")
+    spark_events = [
+        ("a.csv", "NEW", None, None, datetime(2025, 11, 13, 9, 0, 1), 1),
+        ("a.csv", "PROCESSING", None, None, datetime(2025, 11, 13, 9, 0, 2), 2),
+        ("b.csv", "NEW", None, None, datetime(2025, 11, 13, 9, 0, 3), 3),
+        ("b.csv", "PROCESSING", None, None, datetime(2025, 11, 13, 9, 0, 4), 4),
+        ("b.csv", "FAILED", None, "boom", datetime(2025, 11, 13, 9, 0, 5), 5),
+        # same instant as b's FAILED: seq breaks the tie
+        ("c.csv", "NEW", None, None, datetime(2025, 11, 13, 9, 0, 5), 6),
+        ("c.csv", "CLEAN_EXPORTED", 9, None, datetime(2025, 11, 13, 9, 0, 5), 7),
+    ]
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        for ev in spark_events:
+            spark.createDataFrame([ev], FILE_LOG_SCHEMA).write.mode("append").parquet(path)
+    finally:
+        spark.conf.set(key, prev)
+    files = os.listdir(path)
+    data = [f for f in files if not f.startswith(("_", "."))]
+    assert "_SUCCESS" in files and any(f.endswith(".crc") for f in files)
+    # INT96 is what pyarrow reads back as timestamp[ns] without a zone
+    assert all(
+        pq.read_schema(os.path.join(path, f)).field("last_updated").type == pa.timestamp("ns")
+        for f in data
+    )
+
+    def spark_current():
+        return {
+            tuple(r)
+            for r in latest_per_key(
+                spark.read.schema(FILE_LOG_SCHEMA).parquet(path),
+                "file_name",
+                ["last_updated", "seq"],
+            ).collect()
+        }
+
+    log = FileLog(spark, path)
+    assert {tuple(r) for r in log.current().collect()} == spark_current()
+    assert {r.file_name: r.status for r in log.current().collect()} == {
+        "a.csv": "PROCESSING",
+        "b.csv": "FAILED",
+        "c.csv": "CLEAN_EXPORTED",
+    }
+    # the cadence counts data files only, not Spark's .crc/_SUCCESS files
+    assert log.maybe_compact(threshold=len(data)) == 0
+
+    log.record("a.csv", "CLEAN_EXPORTED", row_count=3)
+    before = {tuple(r) for r in log.current().collect()}
+    assert before == spark_current()
+    assert log.compact() == len(spark_events) + 1 - 3
+    assert len(os.listdir(path)) == 1  # one snapshot; .crc and _SUCCESS gone
+    assert {tuple(r) for r in log.current().collect()} == before
+
+
 def test_job_log_compact_preserves_current(spark, tmp_path):
     from data_warehouse_opensky_spark.warehouse.control import JobLog
 

@@ -709,3 +709,38 @@ def test_stateful_agg_under_rocksdb_provider(spark, tmp_path):
             )
     assert got == want
     assert any(m["stateOperators"] for m in metrics), metrics
+
+
+def test_event_schema_cache_one_entry_per_path(spark, tmp_path):
+    """The events.parquet schema cache holds one entry per path: a
+    regenerated file replaces its entry (and its schema), and a path
+    that cannot be stat'ed is never cached."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_warehouse_opensky_spark.plans import streaming_queries as sq
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.table({"user_id": [1], "ts": pa.array([0], pa.timestamp("us", tz="UTC"))}), path)
+    sq._stream_events(spark, str(tmp_path))
+    assert set(sq._EVENT_SCHEMA_CACHE[path][1].fieldNames()) == {"user_id", "ts"}
+
+    pq.write_table(
+        pa.table(
+            {
+                "user_id": [1, 2],
+                "event_type": ["click", "view"],
+                "ts": pa.array([0, 1], pa.timestamp("us", tz="UTC")),
+            }
+        ),
+        path,
+    )
+    n_entries = len(sq._EVENT_SCHEMA_CACHE)
+    sq._stream_events(spark, str(tmp_path))
+    assert len(sq._EVENT_SCHEMA_CACHE) == n_entries
+    assert "event_type" in sq._EVENT_SCHEMA_CACHE[path][1].fieldNames()
+
+    missing = tmp_path / "absent"
+    with pytest.raises(Exception):
+        sq._stream_events(spark, str(missing))
+    assert str(missing / "events.parquet") not in sq._EVENT_SCHEMA_CACHE
