@@ -1034,8 +1034,13 @@ def mixture_weights(
 CDC_W = 8        # boundary hash window (chars)
 CDC_DIVISOR = 64  # boundary when window-hash % divisor == 0 (~64-char mean)
 
+CDC_CHUNK_SCHEMA = (
+    "doc_id long, chunk_idx long, start_pos long, chunk_len long,"
+    " chunk_md5 string"
+)
 
-def cdc_chunks(
+
+def cdc_chunks_arrow(
     docs: DataFrame,
     *,
     id_col: str = "doc_id",
@@ -1054,100 +1059,14 @@ def cdc_chunks(
     p = i+W-1 iff polyhash(chars i..i+W-1) % DIVISOR == 0 and p < L;
     chunk bounds are [0, cuts…, L]. Pure content rule (no min/max
     clamp), so every boundary decision is independent — the whole
-    operator stays a row-local flat-map: zero shuffles, O(L·W) array
-    ops with W a constant 8. Two codegen lessons are baked in
-    (measured at sf0.1): char codes are materialized ONCE per doc via
-    split(text, '') — the per-position substring(text, j, 1) form
-    re-seeks the string from byte 0 every call, O(L²) per doc, 30.8 s
-    for the catalog query — and the window hash is a COMPACT
-    aggregate-over-slice fold of that code array, because an unrolled
-    8-term polynomial looked faster but exploded the plan: Catalyst's
-    project collapse inlines the bounds expression into every
-    consumer, and the duplicated jumbo tree took the optimizer ~8.6
-    MINUTES of driver time on the first (cold) run. Small expression
-    trees are a scale dimension too. Empty docs emit no chunks.
-    """
-    chunks = f"""
-      flatten(transform(
-        array(transform(split({text_col}, ''), c -> CAST(ascii(c) AS BIGINT))),
-        cs -> flatten(transform(
-          array(concat(
-            array(CAST(0 AS BIGINT)),
-            CASE WHEN length({text_col}) >= {CDC_W} THEN
-              filter(
-                transform(sequence(1, length({text_col}) - {CDC_W - 1}, 1),
-                  i -> IF(
-                    aggregate(slice(cs, i, {CDC_W}), CAST(0 AS BIGINT),
-                              (acc, c) -> (acc * 31 + c) % {ROLLING_MOD})
-                      % {CDC_DIVISOR} = 0
-                    AND i + {CDC_W - 1} < length({text_col}),
-                    CAST(i + {CDC_W - 1} AS BIGINT),
-                    CAST(-1 AS BIGINT))),
-                p -> p > 0)
-            ELSE array() END,
-            -- length(text), NOT size(cs): split('', '') is [''] (size
-            -- 1), so size(cs) would hand empty docs a phantom 1-char
-            -- bound; length('') = 0 keeps them chunk-free
-            array(CAST(length({text_col}) AS BIGINT)))),
-          bs -> transform(sequence(1, size(bs) - 1, 1),
-            k -> struct(
-              CAST(k - 1 AS BIGINT) AS chunk_idx,
-              element_at(bs, CAST(k AS INT)) AS start_pos,
-              element_at(bs, CAST(k AS INT) + 1)
-                - element_at(bs, CAST(k AS INT)) AS chunk_len))))))
-    """
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("_text"),
-            F.explode(F.expr(chunks)).alias("_c"),
-        )
-        .select(
-            "doc_id",
-            F.col("_c.chunk_idx").alias("chunk_idx"),
-            F.col("_c.start_pos").alias("start_pos"),
-            F.col("_c.chunk_len").cast("long").alias("chunk_len"),
-            F.expr(
-                "md5(substring(_text, CAST(_c.start_pos AS INT) + 1,"
-                " CAST(_c.chunk_len AS INT)))"
-            ).alias("chunk_md5"),
-        )
-        .filter(F.col("chunk_len") > 0)
-    )
+    operator stays a row-local flat-map: zero shuffles, and only
+    (doc_id, text) crosses the Python boundary. Codepoints via ord(),
+    the 31-base poly fold mod 2^31-1, md5 over the chunk's UTF-8
+    bytes. Empty docs emit no chunks.
 
-
-CDC_CHUNK_SCHEMA = (
-    "doc_id long, chunk_idx long, start_pos long, chunk_len long,"
-    " chunk_md5 string"
-)
-
-
-def cdc_chunks_arrow(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Vectorized twin of :func:`cdc_chunks` — identical boundary rule
-    and output, computed in numpy + hashlib inside ``mapInArrow``
-    (guide §4.2: batch-local native code beats interpreted expression
-    eval for O(L·W) per-row folds).
-
-    Why the twin exists (measured, r13): the HOF form's
-    aggregate-over-slice fold runs on Spark's INTERPRETED expression
-    path, and at catalog scale it does double damage — (a) it is the
-    slowest per-row fold in the suite, and (b) compiling its jumbo
-    lambda tree into the shared higher-order-function eval sites
-    mid-session deoptimizes the JIT state that every md5-HOF dedup
-    query relies on (the record-28 minhash-family 2.5-3× in-bench step
-    was bisected to exactly this query's warmup: catalog prefixes
-    0..182 time the family at its floors, adding corpus_cdc_chunks
-    elevates all six — OPTIMIZATION_r13.md item 1). The arrow twin
-    keeps the distributed shape (row-local flat map, zero shuffles,
-    only (doc_id, text) crosses the Python boundary) and reproduces
-    the exact semantics: codepoints via ord() (== ascii() both
-    engines), the same 31-base poly fold mod 2^31-1, md5 over the
-    chunk's UTF-8 bytes.
+    The fold runs in numpy + hashlib inside ``mapInArrow`` (guide
+    §4.2: batch-local native code beats interpreted expression eval
+    for O(L·W) per-row folds).
     """
     import hashlib
     from collections.abc import Iterator
@@ -1180,7 +1099,7 @@ def cdc_chunks_arrow(
                     for j in range(w):
                         h = (h * 31 + cs[j : j + n_win]) % ROLLING_MOD
                     # cut AFTER char p = i+W-1 (1-based) iff hash%D==0
-                    # and p < L — identical rule to the HOF form
+                    # and p < L
                     cut_idx = np.nonzero(h % CDC_DIVISOR == 0)[0] + w
                     cuts = cut_idx[cut_idx < ln].tolist()
                 else:

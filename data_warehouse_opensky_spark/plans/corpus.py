@@ -1379,10 +1379,9 @@ def corpus_interleave_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     "length, md5, and n_copies across the corpus (the CAS dedup "
     "savings signal). Exactness: boundary hashes are int64 polynomial "
     "folds mod 2^31-1 (identical fold both engines), chunk identity "
-    "is md5. Scale: chunking is a row-local higher-order-function "
-    "flat-map (zero shuffles, O(L) array ops after a split-once char "
-    "materialization — see operators/text.py:cdc_chunks for the two "
-    "measured codegen choices); the ONLY shuffle is the n_copies "
+    "is md5. Scale: chunking is a row-local Arrow flat-map "
+    "(operators/text.py:cdc_chunks_arrow — numpy rolling hash in "
+    "mapInArrow, zero shuffles); the ONLY shuffle is the n_copies "
     "count on the 128-bit chunk "
     "digest — the same single-shuffle shape as dedup_exact, at chunk "
     "grain.",

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cents
 from ..session import configure_runtime
+from ..sources.registry import normalize_event_ts
 from .catalog import query
 
 
@@ -36,8 +37,8 @@ _EVENT_SCHEMA_CACHE: dict[str, tuple[tuple[int, int], "object"]] = {}
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over events.parquet with the same ts normalization as
-    the batch path (ns → µs floor, sources/registry.py)."""
+    """readStream over events.parquet with the batch path's ts
+    normalization (sources/registry.py:normalize_event_ts)."""
     configure_runtime(spark)
     path = f"{sf_dir}/events.parquet"
     # One os.stat revalidates the cached schema (ADVICE r12); a missing
@@ -57,20 +58,11 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             _EVENT_SCHEMA_CACHE[path] = (stat_key, schema)
     # File stream sources take a DIRECTORY; select just the events file
     # out of the sf_dir with a glob filter.
-    stream = (
+    return normalize_event_ts(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet → NTZ, which
-        # withWatermark rejects; session tz is pinned UTC so the cast is
-        # wall-clock identity (same normalization as sources/registry.py).
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
 
 
 def drain_with_state_metrics(

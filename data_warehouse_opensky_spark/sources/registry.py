@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..session import configure_runtime
 
@@ -88,24 +89,25 @@ def load_table(
     ):
         df = df.repartition(spark.sparkContext.defaultParallelism)
     if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        from pyspark.sql import functions as F
-
-        if ts_type == "bigint":
-            # parquet TIMESTAMP(NANOS) read as long ns (nanosAsLong conf)
-            # — floor to µs, exactly what DuckDB sees for the same file.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) — NTZ.
-            # Session tz is pinned UTC (session.py), so this cast is the
-            # identity on the wall-clock value while giving the LTZ type
-            # event-time operators (withWatermark) require.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_event_ts(df)
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """`events.ts` as a session-UTC TIMESTAMP, whichever parquet
+    encoding the file carries. Batch and streaming frames alike."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # parquet TIMESTAMP(NANOS) read as long ns (nanosAsLong conf)
+        # — floor to µs, exactly what DuckDB sees for the same file.
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        # parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) — NTZ.
+        # Session tz is pinned UTC (session.py), so this cast is the
+        # identity on the wall-clock value while giving the LTZ type
+        # event-time operators (withWatermark) require.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

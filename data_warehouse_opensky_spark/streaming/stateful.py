@@ -264,58 +264,3 @@ def timeout_day_sessions(events: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-
-
-# --------------------------------------------------------------------------
-# transformWithState twin (Spark 4 API) — OPTIONAL-DEPENDENCY GATED
-# --------------------------------------------------------------------------
-def running_user_counts_tws(events: DataFrame) -> DataFrame:
-    """`transformWithStateInPandas` twin of running_user_stats — the
-    Spark 4 stateful API that supersedes applyInPandasWithState
-    (typed per-key state handles, timers, TTL, RocksDB-only store).
-
-    Dependency boundary (same contract as the PIL decode twin,
-    operators/multimodal.py): the TWS Python runner speaks protobuf
-    to the JVM, so this path needs `google.protobuf`, which this
-    container does not ship — the import guard raises ImportError and
-    tests skip (tests/test_streaming.py::test_tws_running_counts).
-    The applyInPandasWithState twin above is the executable gate; this
-    function keeps the new-API shape compiled and covered where the
-    dependency exists. Callers must also set
-    spark.sql.streaming.stateStore.providerClass to the RocksDB
-    provider (TWS rejects the HDFS-backed default).
-    """
-    import google.protobuf  # noqa: F401 — hard requirement of the TWS runner
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningCounts(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("agg", "n BIGINT, max_c BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._st.exists():
-                n, max_c = self._st.get()
-            else:
-                n, max_c = 0, None
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    m = int(pdf["value_c"].max())
-                    max_c = m if max_c is None else max(max_c, m)
-            self._st.update((n, max_c))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value_c": [max_c]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningCounts(),
-        outputStructType="user_id long, n_events long, max_value_c long",
-        outputMode="Update",
-        timeMode="None",
-    )

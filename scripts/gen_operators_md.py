@@ -48,7 +48,9 @@ SURVEY_MATRIX: list[tuple[str, str, str]] = [
     ("T1.12", "Numeric coercion cast ×7",
      "`functions/casts.py` try_cast set; query `opensky_clean_parity`; ANSI guard in tests/test_transform.py"),
     ("T1.13", "Nullable-int cast", "`functions/casts.py`; `opensky_clean_parity`"),
-    ("T1.14", "Epoch-seconds→timestamp", "`functions/casts.py::ts_seconds`; `opensky_clean_parity`, `datetime_funcs`"),
+    ("T1.14", "Epoch-seconds→timestamp",
+     "`transform.py::clean_state_vectors` (timestamp_seconds over try_cast long); "
+     "`opensky_clean_parity`, `datetime_funcs`"),
     ("T1.15", "Strict boolean parse",
      "`functions/casts.py::strict_bool` (when-chain, NOT cast) ; `opensky_clean_parity`"),
     ("T1.16", "Projection + reorder + NULL back-fill",
@@ -135,11 +137,25 @@ def main() -> None:
         rows.append(
             f"| `{name}` | {q.tier} | {'exact' if q.oracle else 'rows-only'} | {doc} |"
         )
-    # Sanity: every query named in the matrix must exist in the catalog.
+    # Sanity: every query named in the matrix must exist in the catalog,
+    # and every cited `path.py::name` (`a/b/c` cites three names) must
+    # import. (T1 rows reference module functions; only T2/T3 rows name
+    # queries.)
+    import importlib
     import re
 
-    # (T1 rows reference module functions; only T2/T3 rows name queries.)
     for rid, _, impl in SURVEY_MATRIX:
+        for path, names in re.findall(r"`([\w/]+)\.py::([\w./]+)`", impl):
+            mod = importlib.import_module(
+                "data_warehouse_opensky_spark." + path.replace("/", ".")
+            )
+            for name in names.split("/"):
+                obj = mod
+                for attr in name.split("."):
+                    assert hasattr(obj, attr), (
+                        f"matrix row {rid} cites unknown {path}.py::{name}"
+                    )
+                    obj = getattr(obj, attr)
         if rid.startswith("T1"):
             continue
         for qname in re.findall(r"`(\w+)`", impl):

@@ -513,7 +513,7 @@ def test_cdc_chunks_cover_text_and_skip_empty_docs(spark):
     than the 8-char hash window get exactly one whole-doc chunk."""
     import hashlib
 
-    from data_warehouse_opensky_spark.operators.text import cdc_chunks
+    from data_warehouse_opensky_spark.operators.text import cdc_chunks_arrow
 
     # doc 3: varied (LCG) text — a periodic string has only ~period
     # distinct 8-char windows, so a 1/64 boundary may never fire; the
@@ -526,7 +526,7 @@ def test_cdc_chunks_cover_text_and_skip_empty_docs(spark):
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id LONG, text STRING"
     )
-    rows = cdc_chunks(docs).orderBy("doc_id", "chunk_idx").collect()
+    rows = cdc_chunks_arrow(docs).orderBy("doc_id", "chunk_idx").collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)

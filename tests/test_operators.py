@@ -249,40 +249,6 @@ def test_connected_components_long_chain_pointer_jump(spark):
     assert got == {(100 + i, 100) for i in range(n)}
 
 
-def test_decode_image_real_requires_pillow_or_decodes(spark):
-    """The real-decoder boundary is honest both ways: without Pillow it
-    raises NotImplementedError (never silently fakes); with Pillow the
-    mapInPandas twin returns true dims under the SAME schema as the
-    deterministic fake, so swapping fake->real is plumbing-compatible."""
-    import pytest
-
-    from data_warehouse_opensky_spark.operators.multimodal import (
-        HAS_PIL,
-        MEDIA_META_SCHEMA,
-        decode_image_meta_pil,
-        decode_image_real,
-    )
-
-    if not HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            decode_image_real(b"\x89PNG\r\n\x1a\n")
-        return
-
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (20, 10)).save(buf, format="PNG")
-    png = buf.getvalue()
-    df = spark.createDataFrame([(1, png)], "doc_id long, payload binary")
-    out = decode_image_meta_pil(df)
-    assert out.schema == MEDIA_META_SCHEMA
-    row = out.collect()[0]
-    assert (row.width, row.height, row.channels) == (20, 10, 3)
-    assert row.n_bytes == len(png)
-
-
 def test_decontaminate_bloom_prefilter_identical_output(spark):
     """The Bloom existence pre-filter (VERDICT r7 #5) is one-sided —
     no false negatives — and its survivors re-verify in the exact
@@ -731,46 +697,3 @@ def test_rank_correlations_on_planted_monotone_series(tmp_path, spark):
         6,
     )
     assert rho == want
-
-
-def test_cdc_chunks_arrow_equals_hof_twin(spark):
-    """r13 item 1/5: corpus_cdc_chunks now runs the numpy/mapInArrow
-    chunker. The HOF fold remains the executable semantic reference —
-    this gate asserts bit-identical output (bounds, indices, lengths,
-    md5s) on documents that exercise every edge: empty text, text
-    shorter than the window (W=8), exact window length, ASCII with
-    planted zero-hash boundaries, multi-line text, non-ASCII
-    codepoints (ascii()/ord() equivalence), and repeated content
-    (shared chunk md5s)."""
-    from data_warehouse_opensky_spark.operators.text import (
-        cdc_chunks,
-        cdc_chunks_arrow,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog. " * 40
-    docs = spark.createDataFrame(
-        [
-            (0, ""),
-            (1, "short"),
-            (2, "exactly8"),
-            (3, base),
-            (4, base),  # duplicate content -> identical chunk md5s
-            (5, "line one\nline two\nline three\n" * 30),
-            (6, "héllo wörld ünïcode — ascii() is codepoints " * 25),
-            (7, "a" * 7 + "b"),
-        ],
-        ["doc_id", "text"],
-    )
-    hof = [
-        tuple(r)
-        for r in cdc_chunks(docs).orderBy("doc_id", "chunk_idx").collect()
-    ]
-    arw = [
-        tuple(r)
-        for r in cdc_chunks_arrow(docs)
-        .orderBy("doc_id", "chunk_idx")
-        .collect()
-    ]
-    assert hof == arw
-    assert len(hof) > 10  # the fixture actually produced chunks
-    assert not any(r[0] == 0 for r in hof)  # empty doc emits none

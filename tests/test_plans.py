@@ -1094,6 +1094,9 @@ def test_aqe_splits_skewed_join_partitions(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
+        # fixed, not the host's core count: with 4 partitions the hot
+        # key's partition is not 2x the median and no skew split forms
+        "spark.sql.shuffle.partitions": "32",
     }
     prev = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():

@@ -626,9 +626,9 @@ def test_capped_block_self_pairs_matches_quadratic_reference(spark, rows, cap):
 # alone (hundreds of pure-Python examples, no Spark in the loop).
 # ---------------------------------------------------------------------------
 def _ref_cdc_bounds(text: str) -> list[int]:
-    """Straight-line transcription of operators/text.py cdc_chunks'
-    boundary rule: cut after 1-indexed char p = i+W-1 iff
-    polyhash(chars i..i+W-1) % DIVISOR == 0 and p < L."""
+    """Straight-line transcription of operators/text.py
+    cdc_chunks_arrow's boundary rule: cut after 1-indexed char
+    p = i+W-1 iff polyhash(chars i..i+W-1) % DIVISOR == 0 and p < L."""
     from data_warehouse_opensky_spark.operators.text import (
         CDC_DIVISOR,
         CDC_W,
@@ -665,23 +665,49 @@ cdc_text = st.text(alphabet="ab \x00", min_size=0, max_size=200)
 @given(st.lists(cdc_text, min_size=1, max_size=6))
 @settings(**SETTINGS)
 def test_cdc_chunks_match_reference(spark, docs):
-    """The SQL-expression plan (split→ascii fold over slices) must
-    reproduce the reference chunking EXACTLY — indices, offsets,
-    lengths, md5s — including docs shorter than one window, empty
-    docs, and texts ending exactly on a boundary (the p < L guard)."""
-    from data_warehouse_opensky_spark.operators.text import cdc_chunks
+    """The Arrow chunker must reproduce the reference chunking
+    EXACTLY — indices, offsets, lengths, md5s — including docs shorter
+    than one window, empty docs, and texts ending exactly on a
+    boundary (the p < L guard)."""
+    got = _cdc_chunks_by_doc(spark, docs)
+    for i, t in enumerate(docs):
+        assert got.get(i, []) == _ref_cdc_chunks(t), (i, t)
 
+
+def _cdc_chunks_by_doc(spark, docs) -> dict[int, list]:
     got: dict[int, list] = {}
     for r in (
-        cdc_chunks(_docs_df(spark, docs))
+        X.cdc_chunks_arrow(_docs_df(spark, docs))
         .orderBy("doc_id", "chunk_idx")
         .collect()
     ):
         got.setdefault(r["doc_id"], []).append(
             (r["chunk_idx"], r["start_pos"], r["chunk_len"], r["chunk_md5"])
         )
-    for i, t in enumerate(docs):
-        assert got.get(i, []) == _ref_cdc_chunks(t), (i, t)
+    return got
+
+
+def test_cdc_chunks_edge_docs_match_reference(spark):
+    """Fixed edge cases for the Arrow chunker against the reference:
+    empty text, text shorter than the window (W=8), exact window
+    length, multi-line text, non-ASCII codepoints (ord() per char,
+    md5 over UTF-8 bytes) and repeated content (shared chunk md5s)."""
+    base = "the quick brown fox jumps over the lazy dog. " * 40
+    docs = [
+        "",
+        "short",
+        "exactly8",
+        base,
+        base,
+        "line one\nline two\nline three\n" * 30,
+        "héllo wörld ünïcode — ascii() is codepoints " * 25,
+        "a" * 7 + "b",
+    ]
+    got = _cdc_chunks_by_doc(spark, docs)
+    want = {i: _ref_cdc_chunks(t) for i, t in enumerate(docs) if t}
+    assert got == want
+    assert sum(map(len, want.values())) > 10  # the docs actually split
+    assert got[3] == got[4]  # duplicate content -> identical chunks
 
 
 @given(

@@ -588,68 +588,6 @@ def test_dedup_within_watermark_evicts_and_dedups(spark, tmp_path):
     assert final_total < 90, f"state grew unbounded: {with_state}"
 
 
-def test_tws_running_counts(spark, tmp_path):
-    """transformWithStateInPandas twin (Spark 4 stateful API): the
-    dependency boundary is honest both ways, same contract as the PIL
-    decode twin (test_decode_image_real_requires_pillow_or_decodes).
-    Without google.protobuf (the TWS runner's wire dependency, the
-    `tws` extra) the operator raises ImportError at construction —
-    never a silent no-op — and that IS the pass. With it, the final
-    per-key state must equal the batch aggregate — identical gate to
-    the applyInPandasWithState twin."""
-    import pytest
-
-    from data_warehouse_opensky_spark.plans.streaming_queries import (
-        _drain_to_memory,
-    )
-    from data_warehouse_opensky_spark.streaming.stateful import (
-        running_user_counts_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError):
-            running_user_counts_tws(spark.range(0).selectExpr("id user_id"))
-        return
-
-    import pyspark.sql.functions as F
-
-    rows = [(u, i, (u * 31 + i) % 97) for u in range(5) for i in range(20)]
-    df = spark.createDataFrame(rows, "user_id BIGINT, i BIGINT, value_c BIGINT")
-    df.coalesce(1).write.parquet(str(tmp_path / "in"))
-    schema = spark.read.parquet(str(tmp_path / "in")).schema
-    stream = spark.readStream.schema(schema).parquet(str(tmp_path / "in"))
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        sink = _drain_to_memory(running_user_counts_tws(stream), mode="update")
-        got = {
-            r["user_id"]: (r["n_events"], r["max_value_c"])
-            for r in sink.groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("max_value_c").alias("max_value_c"),
-            )
-            .collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    want = {
-        u: (20, max((u * 31 + i) % 97 for i in range(20))) for u in range(5)
-    }
-    assert got == want
-
-
 def test_stateful_agg_under_rocksdb_provider(spark, tmp_path):
     """The production state backend is RocksDB, not the HDFS-backed
     in-memory default (at 100 TB of keys the state must spill to
